@@ -238,9 +238,12 @@ object Bench {
     // comparison manufactured 3 phantom regressions (and a ~2×
     // phantom stream gain) precisely because the 3-point bracket
     // could not localize drift. io_calib_mbs keeps its
-    // [start, ~mid, end] shape, now drawn from the same sequence.
+    // [start, mid, end] shape; its mid value is its own probe at the
+    // sweep midpoint, beside calibMid, which the every-ioEvery sequence
+    // misses on sweeps shorter than ioEvery.
     val calibStart = calibMs()
     var calibMid = -1L
+    var ioMid = -1.0
     val ioEvery = 64
     val ioSeq = scala.collection.mutable.ArrayBuffer[Double]()
     ioSeq += ioCalibMbs(ioDir)
@@ -249,7 +252,10 @@ object Bench {
     val midIdx = qlist.size / 2
     val results: Seq[R] =
       qlist.zipWithIndex.map { case ((name, fn), idx) =>
-        if (idx == midIdx) calibMid = calibMs()
+        if (idx == midIdx) {
+          calibMid = calibMs()
+          ioMid = ioCalibMbs(ioDir)
+        }
         if (idx > 0 && idx % ioEvery == 0) ioSeq += ioCalibMbs(ioDir)
         val runs = (1 to 2).map { _ =>
           val builds0 = Memo.buildCount
@@ -273,10 +279,6 @@ object Bench {
     ioSeq += ioCalibMbs(ioDir)
     val ioStart = ioSeq.head
     val ioEnd = ioSeq.last
-    // the ~mid sample of the legacy 3-point field = the sequence
-    // element nearest the sweep midpoint
-    val ioMid = ioSeq(math.min(ioSeq.length - 1,
-      math.max(0, math.round(midIdx.toDouble / ioEvery).toInt)))
     def r2(s: Double): String = BigDecimal(s).setScale(2,
       BigDecimal.RoundingMode.HALF_UP).toString
     def r1(s: Double): String = BigDecimal(s).setScale(1,

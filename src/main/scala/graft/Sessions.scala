@@ -12,6 +12,11 @@ import org.apache.spark.sql.SparkSession
   *    keys are the expected hot spot at 100 TB (SURVEY.md §4.2).
   *  - shuffle.partitions = cores: local-mode right-sizing; a real cluster
   *    deployment would raise this (or rely on AQE coalescing, enabled).
+  *  - codegen cache sized to the working set ([[CodegenCacheEntries]]):
+  *    a 4CE site run compiles more distinct whole-stage classes than
+  *    Spark's default cap of 100 keeps, so every refresh re-ran Janino
+  *    for nearly all of them. The cap is a static conf, read once per JVM
+  *    when the first class compiles, so it must be on the builder.
   */
 object Sessions {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -25,6 +30,16 @@ object Sessions {
   def cpuCount: Int = scala.util.Try(cpus.trim.toInt).toOption
     .filter(_ > 0)
     .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** `spark.sql.codegen.cache.maxEntries`. One 4CE site run at sf0.1
+    * compiles ~270 generated classes: the cache keys a source by class
+    * loader too, so a whole-stage source compiles once for the driver
+    * thread and once for the task threads. At Spark's default cap of 100
+    * a warm pass recompiled ~275 of them; at this cap ~25, the sources
+    * that differ between plannings. 1000 is ~3.5 site runs, so the
+    * entries each refresh adds age out before the working set does. A
+    * full cache holds ~28 MB of heap (~28 KB an entry). */
+  val CodegenCacheEntries = 1000
 
   def local(appName: String): SparkSession = {
     val spark = SparkSession.builder()
@@ -43,6 +58,7 @@ object Sessions {
       // keep managed tables (bucketed-layout tests) out of the repo root
       .config("spark.sql.warehouse.dir", "target/spark-warehouse")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

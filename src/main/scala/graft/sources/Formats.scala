@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1791,6 +1791,32 @@ object Formats {
     },
     Some(roundtripOracle))
 
+  /** The write-audit-publish constraint audit: FK orphans + duplicate
+    * PKs + null PKs of an orders-shaped candidate, in ONE pass over it
+    * (the three rules once ran as three jobs, each re-scanning the staged
+    * parquet). One left join + one PK-grain aggregate computes all three
+    * exactly: orphans = rows with no customer match, dup PKs = PK groups
+    * with > 1 row, null keys = rows in the null-PK group. The customer
+    * key side is deduplicated before the join: a key repeated in the
+    * dimension would otherwise fan each matching order out and count it
+    * as a duplicate PK. */
+  def wapAudit(cand: DataFrame, custKeys: DataFrame): Long = {
+    val keys = custKeys.select(col("c_custkey")).distinct()
+    val per = cand
+      .join(broadcast(keys), cand("o_custkey") === keys("c_custkey"),
+        "left")
+      .groupBy(col("o_orderkey"))
+      .agg(count(lit(1)).as("n"),
+        sum(when(col("c_custkey").isNull, 1L).otherwise(0L)).as("orph"))
+    val r = per.agg(
+      coalesce(sum(col("orph")), lit(0L)).as("orphans"),
+      coalesce(sum(when(col("n") > 1, 1L).otherwise(0L)), lit(0L))
+        .as("dup_pks"),
+      coalesce(sum(when(col("o_orderkey").isNull, col("n"))), lit(0L))
+        .as("null_keys")).head()
+    r.getLong(0) + r.getLong(1) + r.getLong(2)
+  }
+
   /** E182: **write-audit-publish (WAP)** — the lakehouse publishing
     * contract (Iceberg/dbt's staging pattern): a candidate batch is
     * written to STAGING, the constraint audit (the E111 shape: FK
@@ -1815,31 +1841,6 @@ object Formats {
         .select($"o_orderkey", $"o_custkey", $"o_totalprice")
       val custKeys = Tables.read(spark, sfDir, "customer")
         .select($"c_custkey")
-      // Round 21 (guide §1.5/§6 — audit in one pass, VERDICT r20
-      // item 5): the three audit rules used to run as three separate
-      // jobs, each re-scanning the staged parquet (anti-join count,
-      // groupBy-dup count, null-key count). One left join + one
-      // PK-grain aggregate computes all three exactly — orphans =
-      // rows with no customer match, dup PKs = PK groups with > 1
-      // row, null keys = rows in the null-PK group — so the staging
-      // batch is scanned ONCE per audit. Same counts, same rule
-      // semantics, one job instead of three.
-      def audit(cand: org.apache.spark.sql.DataFrame): Long = {
-        val per = cand
-          .join(broadcast(custKeys),
-            cand("o_custkey") === custKeys("c_custkey"), "left")
-          .groupBy($"o_orderkey")
-          .agg(count(lit(1)).as("n"),
-            sum(when($"c_custkey".isNull, 1L).otherwise(0L))
-              .as("orph"))
-        val r = per.agg(
-          coalesce(sum($"orph"), lit(0L)).as("orphans"),
-          coalesce(sum(when($"n" > 1, 1L).otherwise(0L)), lit(0L))
-            .as("dup_pks"),
-          coalesce(sum(when($"o_orderkey".isNull, $"n")), lit(0L))
-            .as("null_keys")).head()
-        r.getLong(0) + r.getLong(1) + r.getLong(2)
-      }
       val clean = base
       // planted violations are self-contained (negative keys): one FK
       // orphan + one PK duplicated between the two planted rows — so
@@ -1852,7 +1853,7 @@ object Formats {
         case (name, cand) =>
           cand.write.mode("overwrite").parquet(staging)
           val staged = spark.read.parquet(staging)
-          val violations = audit(staged)
+          val violations = wapAudit(staged, custKeys)
           val publish = violations == 0
           if (publish)
             staged.write.mode("overwrite").parquet(published)

@@ -339,4 +339,20 @@ class FormatsSuite extends AnyFunSuite {
     assert(naive > nDocs,
       s"embedded newlines must split naive reads: $naive vs $nDocs")
   }
+
+  test("WAP audit: a repeated customer key is not a duplicate order PK") {
+    // the dimension plants customer 10 twice; orders 1 and 2 reference
+    // it. Each order must still count once: zero violations on the clean
+    // batch, and exactly the three planted ones (an orphan, a repeated
+    // order key, a null order key) on the dirty batch
+    import graft.sources.Formats
+    val cust = Seq(10L, 10L, 11L).toDF("c_custkey")
+    val clean = Seq((Option(1L), 10L, 1.0), (Option(2L), 10L, 2.0),
+      (Option(3L), 11L, 3.0)).toDF("o_orderkey", "o_custkey", "o_totalprice")
+    assert(Formats.wapAudit(clean, cust) === 0L)
+    val dirty = clean.unionByName(Seq((Option(4L), 99L, 4.0),
+      (Option(3L), 11L, 3.0), (Option.empty[Long], 11L, 5.0))
+      .toDF("o_orderkey", "o_custkey", "o_totalprice"))
+    assert(Formats.wapAudit(dirty, cust) === 3L)
+  }
 }

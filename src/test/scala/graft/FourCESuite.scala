@@ -456,4 +456,45 @@ class FourCESuite extends AnyFunSuite {
     assert(m1.map(r => r.getAs[Long]("patient_num") ->
       r.getAs[Int]("study_num")).toMap === Map(1L -> 1, 2L -> 2))
   }
+
+  test("a repeated site run reuses its generated code") {
+    // a site re-runs cohort + ten files on every refresh; the second run
+    // must find its whole-stage and expression classes in the codegen
+    // cache (Sessions.CodegenCacheEntries) instead of re-running Janino.
+    // At Spark's default cap of 100 it recompiled almost all of them. A
+    // few dozen stay: AQE numbers codegen stages in the order it plans
+    // them and some helper parameters come out in varying order, so a
+    // handful of sources differ between runs, and Spark compiles each
+    // whole-stage source once per class loader (driver and task thread).
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val codes = codeMap.unionByName(Seq(("med", "EVT:click", 1.0))
+      .toDF("code_category", "local_code", "scale_factor"))
+    def materialize(df: DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    def siteRun(): Unit = {
+      val c = FourCE.cohort(obs, visits, patients, codes, cfg).persist()
+      try {
+        materialize(c)
+        Seq(FourCE.dailyCounts(c, visits, cfg),
+          FourCE.clinicalCourse(c, visits, cfg),
+          FourCE.demographics(c, patients, cfg),
+          FourCE.labs(obs, c, codes, cfg),
+          FourCE.diagnoses(obs, c, cfg),
+          FourCE.medications(obs, c, codes, cfg),
+          FourCE.patientClinicalCourse(c, visits, cfg),
+          FourCE.patientObservations(obs, c, codes, cfg),
+          FourCE.patientMapping(c, cfg),
+          FourCE.patientSummary(c, visits, patients, cfg))
+          .foreach(materialize)
+      } finally { c.unpersist(blocking = true); () }
+    }
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val c0 = compiles
+    siteRun()
+    val c1 = compiles
+    siteRun()
+    val again = compiles - c1
+    assert(again <= 50, s"second site run compiled $again classes " +
+      s"(first run: ${c1 - c0})")
+  }
 }

@@ -412,16 +412,64 @@ class PlanSuite extends AnyFunSuite {
         "pruning), not just a row-level filter")
   }
 
+  /** The list after `key: [` on one plan line, up to its matching `]`
+    * (a filter such as `In(x, [1,2])` nests its own brackets), or to the
+    * end of the line where Spark abbreviated a long list. */
+  private def scanList(line: String, key: String): Option[String] = {
+    val at = line.indexOf(s"$key: [")
+    if (at < 0) None
+    else {
+      val from = at + key.length + 3
+      var depth = 1
+      var i = from
+      while (i < line.length && depth > 0) {
+        if (line(i) == '[') depth += 1
+        else if (line(i) == ']') depth -= 1
+        i += 1
+      }
+      Some(line.substring(from, if (depth == 0) i - 1 else i))
+    }
+  }
+
   /** Number of scans in `p` pruned by the probed cell set — under the
-    * round-21 hybrid at-rest layout the evidence is PartitionFilters
-    * (cell-directory form, cells file-sized) OR a pushed In(cell)
-    * predicate reaching the scan (cell-sorted strip form below the
-    * file-size threshold, pruned by row-group min/max stats). Both
-    * count; a scan with NEITHER is the unpruned regression this lock
-    * exists to catch. */
-  private def cellPruneCount(p: String): Int =
-    "PartitionFilters: \\[[^\\]]*cell".r.findAllIn(p).length +
-      "PushedFilters: \\[[^\\]]*In\\(cell".r.findAllIn(p).length
+    * hybrid at-rest layout the evidence is the `cell` attribute in
+    * PartitionFilters (cell-directory form, cells file-sized) OR a
+    * pushed In(cell) predicate reaching the scan (cell-sorted strip form
+    * below the file-size threshold, pruned by row-group min/max stats).
+    * Either counts, once per scan; a scan with NEITHER is the unpruned
+    * regression this lock exists to catch. `cell` must be the whole
+    * column name: `cells#3` or `cell_id#4` is no evidence. */
+  private def cellPruneCount(p: String): Int = {
+    val cellAttr = "\\bcell#\\d+".r
+    val cellIn = "\\bIn\\(cell,".r
+    def has(l: String, key: String, r: scala.util.matching.Regex) =
+      scanList(l, key).exists(r.findFirstIn(_).isDefined)
+    p.linesIterator.count(l => has(l, "PartitionFilters", cellAttr) ||
+      has(l, "PushedFilters", cellIn))
+  }
+
+  test("cell-prune evidence: exact cell token, nested lists, none fails") {
+    def scan(part: String, pushed: String) =
+      "+- FileScan parquet [vec_id#1L,cell#2L] Batched: true, " +
+        s"PartitionFilters: [$part], PushedFilters: [$pushed], " +
+        "ReadSchema: struct<vec_id:bigint,cell:bigint>"
+    // neither piece of evidence: near-miss column names, a pushed In on
+    // another column, cell only in the output and the read schema
+    assert(cellPruneCount(scan("isnotnull(cells#3L), (cell_id#4L = 1)",
+      "In(cellx, [1,2]), IsNotNull(cell), EqualTo(cell,5)")) === 0)
+    assert(cellPruneCount(scan("", "")) === 0)
+    // a `]` inside an earlier filter does not end either list
+    assert(cellPruneCount(scan("", "In(other, [1,2]), In(cell, [3,4])")) === 1)
+    assert(cellPruneCount(scan(
+      "dynamicpruningexpression(x#5 IN [1,2]), isnotnull(cell#2L)", "")) === 1)
+    // a list Spark abbreviated still reads to the end of its line
+    assert(cellPruneCount(scan("", "IsNotNull(vec_id), In(cell, [1,2,3...")
+      .replace("], ReadSchema", ", ReadSchema")) === 1)
+    // one scan with both pieces of evidence counts once; two scans twice
+    val both = scan("isnotnull(cell#2L)", "In(cell, [1])")
+    assert(cellPruneCount(both) === 1)
+    assert(cellPruneCount(both + "\n" + both) === 2)
+  }
 
   test("kmeans ANN probes a pruned at-rest scan via equi join, no BNLJ") {
     // VERDICT r19 item 2: the candidate join must read ONLY the probed
